@@ -2017,7 +2017,7 @@ def a35_binlog_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     files — real v4 headers, FORMAT_DESCRIPTION, per-group TABLE_MAP,
     WRITE/UPDATE/DELETE_ROWS v2 bodies with packed ints, null bitmaps
     and typed values (sources/binlog.py) — then decoded back through
-    ``binaryFile`` + mapInPandas and applied latest-wins per user_id.
+    ``binaryFile`` + mapInArrow and applied latest-wins per user_id.
     The oracle never sees the bytes: any encode/decode defect (a
     length prefix, a null bit, an update's before/after pairing)
     diverges the hash.
@@ -2215,7 +2215,7 @@ def a35c_binlog_stream(
     batch simulation.
 
     Protocol (incremental discovery proven, not assumed): rotations
-    1-2 are written, a ``readStream(binaryFile) → mapInPandas(decode)
+    1-2 are written, a ``readStream(binaryFile) → mapInArrow(decode)
     → foreachBatch(merge)`` query drains them (availableNow) and
     stops; rotations 3-4 are written ONLY THEN, and a second query on
     the SAME checkpoint resumes from the file-source WAL — the

@@ -49,23 +49,23 @@ checkpoint file are skipped by end-position.
 
 Scale design: binlogs arrive as ROTATED FILES (a deployment caps them
 at ~1 GiB); ``read_binlog`` loads them via ``spark.read.format
-("binaryFile")`` and decodes each file inside ``mapInPandas`` — one
-Python decode pass per file, Arrow-batched out, so a directory of
-rotations decodes with per-file parallelism and NOTHING passes through
-the driver. Ordering is (file name, log_pos), both emitted, so the
-CDC apply can take latest-wins across rotations. Checksums: written
-with checksum_alg = 0 (CHECKSUM_NONE, the pre-5.6.1 and
-binlog_checksum=NONE wire shape); the decoder asserts that byte.
+("binaryFile")`` and decodes each file inside ``mapInArrow`` — one
+Python decode pass per file, built column by column into one Arrow
+record batch, so a directory of rotations decodes with per-file
+parallelism and NOTHING passes through the driver. Ordering is (file
+name, log_pos), both emitted, so the CDC apply can take latest-wins
+across rotations. Checksums: written with checksum_alg = 0
+(CHECKSUM_NONE, the pre-5.6.1 and binlog_checksum=NONE wire shape);
+the decoder asserts that byte.
 """
 
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
-
-import pandas as pd
+from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 MAGIC = b"\xfebin"
 
@@ -100,6 +100,23 @@ _FIXED_INTS = {  # type -> byte width, little-endian signed
     MYSQL_TYPE_INT24: 3,
     MYSQL_TYPE_LONG: 4,
     MYSQL_TYPE_LONGLONG: 8,
+}
+
+# struct codes of the fixed-width numeric types a compiled row reader
+# reads in one unpack (INT24 has none: 3 bytes, it falls back)
+_STRUCT_CODES = {
+    MYSQL_TYPE_TINY: "b",
+    MYSQL_TYPE_SHORT: "h",
+    MYSQL_TYPE_LONG: "i",
+    MYSQL_TYPE_LONGLONG: "q",
+    MYSQL_TYPE_FLOAT: "f",
+    MYSQL_TYPE_DOUBLE: "d",
+}
+
+_OPS = {
+    WRITE_ROWS_EVENT_V2: "insert",
+    UPDATE_ROWS_EVENT_V2: "update",
+    DELETE_ROWS_EVENT_V2: "delete",
 }
 
 _HEADER = struct.Struct("<IBIIIH")  # ts, type, server_id, size, log_pos, flags
@@ -572,7 +589,8 @@ def decode_binlog_bytes(buf: bytes, *, start_pos: int = 0,
     ``{"log_pos", "op", "before", "after", "gtid"}`` where before/after
     are column-value tuples (None where absent) and gtid is the last
     GTID_LOG_EVENT's ``sid:gno`` (None in a GTID-less log). Pure
-    Python, no Spark — the unit the mapInPandas wrapper runs per file.
+    Python, no Spark — the same decode the mapInArrow wrapper runs
+    per file.
 
     ``start_pos`` is the checkpoint-resume cursor: rows events whose
     END position (the header's log_pos, what SHOW MASTER STATUS /
@@ -585,11 +603,41 @@ def decode_binlog_bytes(buf: bytes, *, start_pos: int = 0,
     only the raw two's-complement bytes — MySQL keeps UNSIGNED in the
     table DDL, not the binlog, so a replicator must supply it from
     information_schema or a parsed CREATE TABLE;
-    sources/ddl.unsigned_flags builds the list from the a22 map)."""
+    sources/ddl.unsigned_flags builds the list from the a22 map).
+
+    Rows are read by a reader compiled once per distinct TABLE_MAP
+    body (``_compile_row_reader``). It reads a table whose columns are
+    all TINY/SHORT/LONG/LONGLONG/FLOAT/DOUBLE or VARCHAR with a 1-byte
+    length prefix; a row with any NULL bit, and every row of a table
+    with any other column type, is decoded by ``_decode_row``, the
+    per-value reference. Both give the same tuples."""
+    for log_pos, op, gtid, rows in _rows_events(buf, start_pos,
+                                                unsigned_cols):
+        if op == "update":
+            for i in range(0, len(rows), 2):
+                yield {"log_pos": log_pos, "op": op, "before": rows[i],
+                       "after": rows[i + 1], "gtid": gtid}
+        elif op == "insert":
+            for row in rows:
+                yield {"log_pos": log_pos, "op": op, "before": None,
+                       "after": row, "gtid": gtid}
+        else:
+            for row in rows:
+                yield {"log_pos": log_pos, "op": op, "before": row,
+                       "after": None, "gtid": gtid}
+
+
+def _rows_events(buf: bytes, start_pos: int,
+                 unsigned_cols: list[bool] | None,
+                 ) -> Iterator[tuple[int, str, str | None, list[tuple]]]:
+    """One ``(log_pos, op, gtid, rows)`` per rows event at or after
+    the cursor; ``rows`` holds the decoded images in wire order (an
+    UPDATE's alternate before, after). See ``decode_binlog_bytes``."""
     if buf[:4] != MAGIC:
         raise ValueError("not a binlog file (bad magic)")
     off = 4
-    table: TableSchema | None = None
+    readers: dict[bytes, Callable] = {}  # TABLE_MAP body -> row reader
+    read_row: Callable | None = None
     gtid: str | None = None
     while off < len(buf):
         ts_, code, _sid, size, log_pos, _fl = _HEADER.unpack_from(buf, off)
@@ -625,39 +673,14 @@ def decode_binlog_bytes(buf: bytes, *, start_pos: int = 0,
         if code == XID_EVENT:
             continue
         if code == TABLE_MAP_EVENT:
-            p = 8  # table_id u48 + flags u16
-            slen = body[p]
-            schema = body[p + 1:p + 1 + slen].decode()
-            p += 1 + slen + 1
-            tlen = body[p]
-            tname = body[p + 1:p + 1 + tlen].decode()
-            p += 1 + tlen + 1
-            ncols, p = _read_packed_int(body, p)
-            types = list(body[p:p + ncols])
-            p += ncols
-            mlen, p = _read_packed_int(body, p)
-            meta_end = p + mlen
-            cols = []
-            for t in types:
-                m, p = _meta_parse(t, body, p)
-                cols.append((f"c{len(cols)}", t, m))
-            if p != meta_end:
-                raise ValueError("type-metadata block length mismatch")
-            table = TableSchema(schema, tname, cols)
-            if unsigned_cols is not None:
-                if len(unsigned_cols) != len(table.cols):
-                    raise ValueError(
-                        f"unsigned_cols has {len(unsigned_cols)} flags "
-                        f"for a {len(table.cols)}-column table map"
-                    )
-                table.cols = [
-                    (n, t, m, bool(u))
-                    for (n, t, m, _), u in zip(table.cols, unsigned_cols)
-                ]
+            read_row = readers.get(body)
+            if read_row is None:
+                read_row = readers[body] = _compile_row_reader(
+                    _parse_table_map(body, unsigned_cols)
+                )
             continue
-        if code in (WRITE_ROWS_EVENT_V2, UPDATE_ROWS_EVENT_V2,
-                    DELETE_ROWS_EVENT_V2):
-            if table is None:
+        if code in _OPS:
+            if read_row is None:
                 raise ValueError("rows event before any TABLE_MAP")
             if log_pos <= start_pos:
                 continue  # checkpoint resume: already applied
@@ -669,20 +692,48 @@ def decode_binlog_bytes(buf: bytes, *, start_pos: int = 0,
             p += nbm  # present bitmap (we write all-present)
             if code == UPDATE_ROWS_EVENT_V2:
                 p += nbm
-            while p < len(body):
-                row1, p = _decode_row(table, body, p)
-                if code == UPDATE_ROWS_EVENT_V2:
-                    row2, p = _decode_row(table, body, p)
-                    yield {"log_pos": log_pos, "op": "update",
-                           "before": row1, "after": row2, "gtid": gtid}
-                elif code == WRITE_ROWS_EVENT_V2:
-                    yield {"log_pos": log_pos, "op": "insert",
-                           "before": None, "after": row1, "gtid": gtid}
-                else:
-                    yield {"log_pos": log_pos, "op": "delete",
-                           "before": row1, "after": None, "gtid": gtid}
+            rows = []
+            end = len(body)
+            while p < end:
+                row, p = read_row(body, p)
+                rows.append(row)
+            yield log_pos, _OPS[code], gtid, rows
             continue
         raise ValueError(f"unsupported binlog event type {code}")
+
+
+def _parse_table_map(body: bytes,
+                     unsigned_cols: list[bool] | None) -> TableSchema:
+    p = 8  # table_id u48 + flags u16
+    slen = body[p]
+    schema = body[p + 1:p + 1 + slen].decode()
+    p += 1 + slen + 1
+    tlen = body[p]
+    tname = body[p + 1:p + 1 + tlen].decode()
+    p += 1 + tlen + 1
+    ncols, p = _read_packed_int(body, p)
+    types = list(body[p:p + ncols])
+    p += ncols
+    mlen, p = _read_packed_int(body, p)
+    meta_end = p + mlen
+    cols = []
+    for t in types:
+        m, p = _meta_parse(t, body, p)
+        cols.append((f"c{len(cols)}", t, m))
+    if p != meta_end:
+        raise ValueError("type-metadata block length mismatch")
+    table = TableSchema(schema, tname, cols)
+    if unsigned_cols is not None:
+        if len(unsigned_cols) != len(table.cols):
+            raise ValueError(
+                f"unsigned_cols has {len(unsigned_cols)} flags "
+                f"for a {len(table.cols)}-column table map"
+            )
+        table.cols = [
+            (n, t, m, bool(u))
+            for (n, t, m, _), u in zip(table.cols, unsigned_cols)
+        ]
+    return table
 
 
 def _decode_row(table: TableSchema, body: bytes,
@@ -700,49 +751,108 @@ def _decode_row(table: TableSchema, body: bytes,
     return tuple(vals), p
 
 
+def _compile_row_reader(
+    table: TableSchema,
+) -> Callable[[bytes, int], tuple[tuple, int]]:
+    """A ``_decode_row(table, ...)`` equivalent that reads each run of
+    fixed-width numeric columns with one ``struct.Struct`` (signedness
+    from the table's unsigned flags) and a 1-byte-prefix VARCHAR
+    inline. A row with any NULL bit goes to ``_decode_row``; a table
+    with any other column type gets ``_decode_row`` for every row."""
+    steps: list[struct.Struct | None] = []  # None: 1-byte-prefix VARCHAR
+    fmt = ""
+    for _nm, t, m, unsigned in table.cols:
+        if t in _STRUCT_CODES:
+            code = _STRUCT_CODES[t]
+            fmt += code.upper() if unsigned and t in _FIXED_INTS else code
+        elif t == MYSQL_TYPE_VARCHAR and m < 256:
+            if fmt:
+                steps.append(struct.Struct("<" + fmt))
+                fmt = ""
+            steps.append(None)
+        else:
+            return lambda body, p: _decode_row(table, body, p)
+    if fmt:
+        steps.append(struct.Struct("<" + fmt))
+    nbm = (len(table.cols) + 7) // 8
+    no_nulls = bytes(nbm)
+
+    def read(body: bytes, p: int) -> tuple[tuple, int]:
+        if not body.startswith(no_nulls, p):
+            return _decode_row(table, body, p)
+        p += nbm
+        vals: list = []
+        for step in steps:
+            if step is None:
+                ln = body[p]
+                p += 1 + ln
+                vals.append(body[p - ln:p].decode("utf-8"))
+            else:
+                vals += step.unpack_from(body, p)
+                p += step.size
+        return tuple(vals), p
+
+    return read
+
+
 def _decoder(col_names: list[str], col_types: list[str],
              start_file: str | None, start_pos: int,
-             unsigned_cols: list[bool] | None = None):
+             unsigned_cols: list[bool] | None, time_zone: str):
     """The per-file decode closure + its output schema — shared by the
     batch scan (read_binlog) and the streaming tail
-    (read_binlog_stream) so the two paths cannot drift."""
+    (read_binlog_stream) so the two paths cannot drift. Each file's
+    rows become one Arrow record batch of the schema's exact Arrow
+    types. Timestamps are localized in ``time_zone`` (the session's),
+    as Spark localizes naive pandas timestamps."""
     fields = ", ".join(
         f"{n} {t}" for n, t in zip(col_names, col_types)
     )
-    out_schema = (
+    out_schema = StructType.fromDDL(
         f"log_file string, log_pos long, seq long, op string, "
         f"gtid string, {fields}"
     )
-    as_str = [t.strip().lower() == "string" for t in col_types]
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for _, file_row in pdf.iterrows():
-                rows = []
-                fname = file_row["path"].rsplit("/", 1)[-1]
+    def decode(batches):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        arrow_schema = to_arrow_schema(out_schema)
+
+        def column(vals: list, typ):
+            if not pa.types.is_timestamp(typ):
+                return pa.array(vals, typ)
+            arr = pa.array(vals, pa.timestamp("us"))
+            if time_zone != "UTC":
+                arr = pc.assume_timezone(arr, time_zone, ambiguous="latest")
+            return arr.cast(typ)
+
+        for batch in batches:
+            for path, content in zip(batch.column("path").to_pylist(),
+                                     batch.column("content").to_pylist()):
+                fname = path.rsplit("/", 1)[-1]
                 cursor = (start_pos if start_file is not None
                           and fname == start_file else 0)
-                for seq, ev in enumerate(
-                    decode_binlog_bytes(bytes(file_row["content"]),
-                                        start_pos=cursor,
-                                        unsigned_cols=unsigned_cols)
+                pos, ops, gtids = [], [], []
+                cols: list[list] = [[] for _ in col_names]
+                for log_pos, op, gtid, rows in _rows_events(
+                    content, cursor, unsigned_cols
                 ):
-                    img = ev["after"] if ev["after"] is not None \
-                        else ev["before"]
-                    img = tuple(
-                        v.decode("utf-8")
-                        if s and isinstance(v, bytes) else v
-                        for v, s in zip(img, as_str)
-                    )
-                    rows.append(
-                        (fname, ev["log_pos"], seq, ev["op"],
-                         ev["gtid"], *img)
-                    )
-                if rows:
-                    yield pd.DataFrame(
-                        rows,
-                        columns=["log_file", "log_pos", "seq", "op",
-                                 "gtid", *col_names],
+                    images = rows[1::2] if op == "update" else rows
+                    pos += [log_pos] * len(images)
+                    ops += [op] * len(images)
+                    gtids += [gtid] * len(images)
+                    for col, vals in zip(cols, zip(*images)):
+                        col.extend(vals)
+                n = len(pos)
+                if n:
+                    yield pa.RecordBatch.from_arrays(
+                        [column(vals, f.type) for vals, f in zip(
+                            [[fname] * n, pos, list(range(n)), ops, gtids,
+                             *cols],
+                            arrow_schema,
+                        )],
+                        schema=arrow_schema,
                     )
 
     return decode, out_schema
@@ -754,17 +864,17 @@ def read_binlog(spark: SparkSession, path: str,
                 start_pos: int = 0,
                 unsigned_cols: list[bool] | None = None) -> DataFrame:
     """Distributed binlog decode: ``binaryFile`` scan of the rotation
-    directory, one Python decode per FILE inside mapInPandas (Arrow
-    out). Emits (log_file, log_pos, seq, op, gtid, <after-image
-    columns>) rows, where seq is the 0-based decoded-row ordinal
-    within its file — rows batched into one statement's event share a
-    log_pos, so (log_file, log_pos, seq) is the total apply order, and
-    gtid carries the framing transaction's ``sid:gno`` (null for a
-    GTID-less log). DELETE rows surface the before-image under the
-    same columns with op='delete' — exactly the (pk, version, op,
-    image) frame the a4 apply path consumes. Column NAMES are
-    caller-supplied (a table map carries types, not names — same
-    contract as the MySQL wire); a BLOB/TEXT column declared as
+    directory, one Python decode per FILE inside mapInArrow (one Arrow
+    record batch out per file). Emits (log_file, log_pos, seq, op,
+    gtid, <after-image columns>) rows, where seq is the 0-based
+    decoded-row ordinal within its file — rows batched into one
+    statement's event share a log_pos, so (log_file, log_pos, seq) is
+    the total apply order, and gtid carries the framing transaction's
+    ``sid:gno`` (null for a GTID-less log). DELETE rows surface the
+    before-image under the same columns with op='delete' — exactly the
+    (pk, version, op, image) frame the a4 apply path consumes. Column
+    NAMES are caller-supplied (a table map carries types, not names —
+    same contract as the MySQL wire); a BLOB/TEXT column declared as
     ``string`` is utf-8 decoded at this boundary (the wire carries
     bytes; charset intent lives with the caller, as in a replica's
     column mapping).
@@ -774,8 +884,10 @@ def read_binlog(spark: SparkSession, path: str,
     read, the partition-pruning shape), the start file itself skips
     rows events whose end-position is <= start_pos, and later
     rotations decode in full."""
-    decode, out_schema = _decoder(col_names, col_types,
-                                  start_file, start_pos, unsigned_cols)
+    decode, out_schema = _decoder(
+        col_names, col_types, start_file, start_pos, unsigned_cols,
+        spark.conf.get("spark.sql.session.timeZone"),
+    )
     files = spark.read.format("binaryFile").load(path)
     if start_file is not None:
         from pyspark.sql import functions as F
@@ -783,7 +895,7 @@ def read_binlog(spark: SparkSession, path: str,
         files = files.filter(
             F.element_at(F.split(F.col("path"), "/"), -1) >= start_file
         )
-    return files.select("path", "content").mapInPandas(
+    return files.select("path", "content").mapInArrow(
         decode, schema=out_schema
     )
 
@@ -820,8 +932,10 @@ def read_binlog_stream(spark: SparkSession, path: str,
     )
     # unsigned_cols rides through exactly as in the batch path (r12
     # ADVICE: the streaming twin silently decoded unsigned as signed)
-    decode, out_schema = _decoder(col_names, col_types, None, 0,
-                                  unsigned_cols)
-    return files.select("path", "content").mapInPandas(
+    decode, out_schema = _decoder(
+        col_names, col_types, None, 0, unsigned_cols,
+        spark.conf.get("spark.sql.session.timeZone"),
+    )
+    return files.select("path", "content").mapInArrow(
         decode, schema=out_schema
     )

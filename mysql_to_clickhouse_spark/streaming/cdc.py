@@ -29,6 +29,7 @@ PK range the same way.
 
 from __future__ import annotations
 
+import json
 import os
 import uuid
 
@@ -36,12 +37,21 @@ from mysql_to_clickhouse_spark.functions.tmputil import scratch_dir
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from mysql_to_clickhouse_spark.streaming.replay import write_replay_slices
 
 
-def _latest_per_key(df: DataFrame) -> DataFrame:
-    w = Window.partitionBy("user_id").orderBy(F.desc("ts_us"), F.desc("event_id"))
+_REPLICA_COLS = ["user_id", "event_id", "ts_us", "event_type", "value"]
+_EVENT_ORDER = ("ts_us", "event_id")
+_LOG_ORDER = ("log_file", "log_pos", "seq")
+# footer key under which Spark's parquet writer stores the row schema
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _latest_per_key(df: DataFrame, order=_EVENT_ORDER) -> DataFrame:
+    """Latest row per ``user_id``: the one that sorts last on ``order``."""
+    w = Window.partitionBy("user_id").orderBy(*(F.desc(c) for c in order))
     return (
         df.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
@@ -63,8 +73,11 @@ def _committed_versions(state_root: str) -> list[int]:
     return sorted(out)
 
 
-def make_cdc_apply(state_root: str, fail_at_batch: int | None = None):
-    """foreachBatch merge closure over a versioned parquet state root.
+def _make_apply(state_root: str, cols: list, order,
+                fail_at_batch: int | None = None):
+    """foreachBatch merge closure over a versioned parquet state root:
+    each micro-batch is selected to ``cols``, and per PK the row that
+    sorts last on the ``order`` columns wins.
 
     Idempotent per batch_id: previous state = largest committed version
     < batch_id (so a re-delivered batch never reads its own partial
@@ -75,26 +88,56 @@ def make_cdc_apply(state_root: str, fail_at_batch: int | None = None):
     def apply_batch(batch: DataFrame, batch_id: int) -> None:
         if fail_at_batch is not None and batch_id == fail_at_batch:
             raise RuntimeError(f"injected crash at batch {batch_id}")
-        batch = batch.select(
-            "user_id",
-            "event_id",
-            F.unix_micros("ts").alias("ts_us"),
-            "event_type",
-            "value",
-        )
+        batch = batch.select(*cols)
         prior = [v for v in _committed_versions(state_root) if v < batch_id]
         if prior:
-            prev = batch.sparkSession.read.parquet(
+            # every version was written from batches of this shape, so
+            # its schema is known: reading with it skips a parquet
+            # schema-inference job per micro-batch
+            prev = batch.sparkSession.read.schema(batch.schema).parquet(
                 os.path.join(state_root, f"v{max(prior)}")
             )
-            merged = _latest_per_key(prev.unionByName(batch))
-        else:
-            merged = _latest_per_key(batch)
-        merged.write.mode("overwrite").parquet(
+            batch = prev.unionByName(batch)
+        _latest_per_key(batch, order).write.mode("overwrite").parquet(
             os.path.join(state_root, f"v{batch_id}")
         )
 
     return apply_batch
+
+
+def _read_final(spark: SparkSession, state_root: str, live) -> DataFrame:
+    """FINAL read of the latest committed state version: the rows that
+    pass ``live`` (tombstones dropped), with the schema the writer
+    stored in a part file's footer — read here with pyarrow, so
+    building this DataFrame launches no Spark job."""
+    import pyarrow.parquet as pq
+
+    versions = _committed_versions(state_root)
+    if not versions:
+        raise FileNotFoundError(f"no committed state under {state_root}")
+    path = os.path.join(state_root, f"v{versions[-1]}")
+    parts = sorted(n for n in os.listdir(path) if n.startswith("part-"))
+    if not parts:
+        raise FileNotFoundError(f"no parquet part file in {path}")
+    footer = pq.read_metadata(os.path.join(path, parts[0])).metadata
+    schema = StructType.fromJson(json.loads(footer[_SPARK_SCHEMA_KEY]))
+    return (
+        spark.read.schema(schema).parquet(path)
+        .filter(live)
+        .select(*_REPLICA_COLS)
+    )
+
+
+def make_cdc_apply(state_root: str, fail_at_batch: int | None = None):
+    """foreachBatch merge for the replayed event stream: latest event
+    per PK by (ts_us, event_id); see ``_make_apply``."""
+    return _make_apply(
+        state_root,
+        ["user_id", "event_id", F.unix_micros("ts").alias("ts_us"),
+         "event_type", "value"],
+        _EVENT_ORDER,
+        fail_at_batch,
+    )
 
 
 def start_cdc_query(
@@ -124,13 +167,7 @@ def start_cdc_query(
 def read_cdc_state(spark: SparkSession, state_root: str) -> DataFrame:
     """FINAL read of the latest committed state version: latest
     non-tombstone row per PK."""
-    versions = _committed_versions(state_root)
-    if not versions:
-        raise FileNotFoundError(f"no committed CDC state under {state_root}")
-    final = spark.read.parquet(os.path.join(state_root, f"v{versions[-1]}"))
-    return final.filter(F.col("event_type") != "error").select(
-        "user_id", "event_id", "ts_us", "event_type", "value"
-    )
+    return _read_final(spark, state_root, F.col("event_type") != "error")
 
 
 def run_cdc_stream(
@@ -157,21 +194,7 @@ def run_cdc_stream(
 # real binlog tail orders by — and deletes ride as tombstoned ops.
 # ---------------------------------------------------------------------------
 
-_BINLOG_COLS = [
-    "log_file", "log_pos", "seq", "op",
-    "user_id", "event_id", "ts_us", "event_type", "value",
-]
-
-
-def _latest_per_key_binlog(df: DataFrame) -> DataFrame:
-    w = Window.partitionBy("user_id").orderBy(
-        F.desc("log_file"), F.desc("log_pos"), F.desc("seq")
-    )
-    return (
-        df.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
+_BINLOG_COLS = [*_LOG_ORDER, "op", *_REPLICA_COLS]
 
 
 def make_binlog_apply(state_root: str):
@@ -179,31 +202,10 @@ def make_binlog_apply(state_root: str):
     PK in LOG order, deletes kept as tombstones in state (filtered on
     read — ReplacingMergeTree + FINAL). Same idempotent v{batch_id}
     commit protocol as make_cdc_apply."""
-
-    def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        batch = batch.select(*_BINLOG_COLS)
-        prior = [v for v in _committed_versions(state_root) if v < batch_id]
-        if prior:
-            prev = batch.sparkSession.read.parquet(
-                os.path.join(state_root, f"v{max(prior)}")
-            )
-            merged = _latest_per_key_binlog(prev.unionByName(batch))
-        else:
-            merged = _latest_per_key_binlog(batch)
-        merged.write.mode("overwrite").parquet(
-            os.path.join(state_root, f"v{batch_id}")
-        )
-
-    return apply_batch
+    return _make_apply(state_root, _BINLOG_COLS, _LOG_ORDER)
 
 
 def read_binlog_state(spark: SparkSession, state_root: str) -> DataFrame:
     """FINAL read over the binlog-apply state: latest committed
     version, tombstones dropped."""
-    versions = _committed_versions(state_root)
-    if not versions:
-        raise FileNotFoundError(f"no committed state under {state_root}")
-    final = spark.read.parquet(os.path.join(state_root, f"v{versions[-1]}"))
-    return final.filter(F.col("op") != "delete").select(
-        "user_id", "event_id", "ts_us", "event_type", "value"
-    )
+    return _read_final(spark, state_root, F.col("op") != "delete")

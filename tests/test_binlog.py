@@ -1,17 +1,35 @@
 """ROW-format binlog writer/decoder (sources/binlog.py) — format
 round-trip properties plus the distributed read path (a35)."""
 
+import datetime
+import decimal
 import os
 import struct
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from mysql_to_clickhouse_spark.sources.binlog import (
     MAGIC,
+    MYSQL_TYPE_BLOB,
+    MYSQL_TYPE_DATE,
+    MYSQL_TYPE_DATETIME2,
     MYSQL_TYPE_DOUBLE,
+    MYSQL_TYPE_FLOAT,
+    MYSQL_TYPE_INT24,
+    MYSQL_TYPE_LONG,
     MYSQL_TYPE_LONGLONG,
+    MYSQL_TYPE_NEWDECIMAL,
+    MYSQL_TYPE_SHORT,
+    MYSQL_TYPE_TIMESTAMP2,
+    MYSQL_TYPE_TINY,
     MYSQL_TYPE_VARCHAR,
     TableSchema,
+    _compile_row_reader,
+    _decode_row,
+    _encode_value,
+    _null_bitmap,
     decode_binlog_bytes,
     read_binlog,
     write_binlog,
@@ -372,3 +390,145 @@ def test_streaming_tail_honors_unsigned_flags(spark, tmp_path):
 
     assert drain(flags) == [big]
     assert drain(None) == [big - (1 << 64)]  # signed misread, the bug
+
+
+
+# --- compiled row reader == _decode_row, over random tables and rows ---
+# A column strategy yields (mysql_type, meta, unsigned, strategy of the
+# value's wire bytes).
+
+
+def _ints(t, width):
+    def col(unsigned):
+        bits = 8 * width
+        lo, hi = ((0, (1 << bits) - 1) if unsigned
+                  else (-(1 << (bits - 1)), (1 << (bits - 1)) - 1))
+        vals = st.one_of(st.just(0), _boundary(lo, hi))
+        return st.just((t, 0, unsigned, vals.map(
+            lambda v: _encode_value(t, 0, v, unsigned))))
+    return st.booleans().flatmap(col)
+
+
+def _floats(t, width):
+    # raw bit patterns, with NaN, -0.0 and the infinities spelled out
+    fmt = "<f" if width == 4 else "<d"
+    specials = [struct.pack(fmt, v) for v in
+                (float("nan"), -0.0, float("inf"), float("-inf"))]
+    return st.just((t, width, False, st.one_of(
+        st.sampled_from(specials),
+        st.binary(min_size=width, max_size=width),
+    )))
+
+
+def _encoded(t, meta, vals):
+    return st.just((t, meta, False,
+                    vals.map(lambda v: _encode_value(t, meta, v))))
+
+
+def _boundary(lo, hi):
+    return st.one_of(st.sampled_from([lo, hi]), st.integers(lo, hi))
+
+
+def _varchar(meta):
+    # st.text's alphabet is all of Unicode: <= 40 chars <= 160 bytes
+    return _encoded(MYSQL_TYPE_VARCHAR, meta, st.text(max_size=40))
+
+
+def _newdecimal(prec, scale):
+    bound = 10 ** prec - 1
+    vals = st.integers(-bound, bound).map(
+        lambda c: decimal.Decimal(f"{c}e-{scale}"))
+    return _encoded(MYSQL_TYPE_NEWDECIMAL, (prec << 8) | scale, vals)
+
+
+_COMPILED_COLUMNS = st.one_of(
+    _ints(MYSQL_TYPE_TINY, 1), _ints(MYSQL_TYPE_SHORT, 2),
+    _ints(MYSQL_TYPE_LONG, 4), _ints(MYSQL_TYPE_LONGLONG, 8),
+    _floats(MYSQL_TYPE_FLOAT, 4), _floats(MYSQL_TYPE_DOUBLE, 8),
+    _boundary(160, 255).flatmap(_varchar),  # 1-byte length prefix
+)
+_FALLBACK_COLUMNS = st.one_of(
+    _ints(MYSQL_TYPE_INT24, 3),
+    _boundary(256, 2000).flatmap(_varchar),  # 2-byte length prefix
+    st.integers(1, 30).flatmap(
+        lambda p: st.integers(0, min(p, 10)).flatmap(
+            lambda s: _newdecimal(p, s))),
+    st.integers(0, 6).flatmap(lambda fsp: _encoded(
+        MYSQL_TYPE_DATETIME2, fsp,
+        st.datetimes(datetime.datetime(1000, 1, 1)))),
+    st.integers(0, 6).flatmap(lambda fsp: _encoded(
+        MYSQL_TYPE_TIMESTAMP2, fsp,
+        st.datetimes(datetime.datetime(1970, 1, 1),
+                     datetime.datetime(2106, 2, 7),
+                     timezones=st.just(datetime.timezone.utc)))),
+    _encoded(MYSQL_TYPE_DATE, 0, st.dates(datetime.date(1000, 1, 1))),
+    st.integers(1, 4).flatmap(lambda meta: _encoded(
+        MYSQL_TYPE_BLOB, meta, st.binary(max_size=200))),
+)
+
+
+@st.composite
+def _table_and_body(draw):
+    """A random table (compiled-only columns half the time, so the
+    fast path is exercised), rows with NULLs in any column (in half
+    the tables), and the rows' wire bytes behind a junk prefix."""
+    compiled_only = draw(st.booleans())
+    cols = draw(st.lists(
+        _COMPILED_COLUMNS if compiled_only
+        else st.one_of(_COMPILED_COLUMNS, _FALLBACK_COLUMNS),
+        min_size=1, max_size=12,
+    ))
+    with_nulls = draw(st.booleans())
+    body = bytearray(draw(st.binary(max_size=8)))
+    start = len(body)
+    for _ in range(draw(st.integers(1, 4))):
+        vals = [draw(st.none() | v) if with_nulls else draw(v)
+                for _t, _m, _u, v in cols]
+        body += _null_bitmap(vals, len(cols)) + b"".join(
+            v for v in vals if v is not None)
+    table = TableSchema("app", "t", [
+        (f"c{i}", t, m, u) for i, (t, m, u, _v) in enumerate(cols)
+    ])
+    return table, bytes(body), start
+
+
+def _bits(row):
+    """Row key with floats by bit pattern (NaN != NaN as a value)."""
+    return tuple(struct.pack("<d", v) if isinstance(v, float) else v
+                 for v in row)
+
+
+@given(case=_table_and_body())
+@settings(max_examples=400, deadline=None)
+def test_compiled_row_reader_matches_decode_row(case):
+    table, body, p = case
+    read = _compile_row_reader(table)
+    ref_p = p
+    while ref_p < len(body):
+        got, p = read(body, p)
+        want, ref_p = _decode_row(table, body, ref_p)
+        assert _bits(got) == _bits(want)
+        assert p == ref_p
+
+
+def test_read_binlog_keeps_wall_clock_in_session_time_zone(spark, tmp_path):
+    """A DATETIME2 value is a wall-clock time: decoded under a non-UTC
+    session time zone, it must read back as the same wall clock in
+    that zone (the localization Spark applies to naive timestamps)."""
+    from pyspark.sql import functions as F
+
+    d = str(tmp_path)
+    ts = TableSchema("app", "t", [("id", MYSQL_TYPE_LONGLONG, 0),
+                                  ("at", MYSQL_TYPE_DATETIME2, 6)])
+    at = datetime.datetime(2026, 8, 16, 12, 34, 56, 789123)
+    write_binlog(os.path.join(d, "binlog.000001"), ts, [("insert", (1, at))])
+    key = "spark.sql.session.timeZone"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "America/Los_Angeles")
+    try:
+        got = read_binlog(spark, d, ["id", "at"], ["long", "timestamp"]).select(
+            F.date_format("at", "yyyy-MM-dd HH:mm:ss.SSSSSS")
+        ).first()[0]
+    finally:
+        spark.conf.set(key, prior)
+    assert got == "2026-08-16 12:34:56.789123"

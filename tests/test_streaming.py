@@ -311,3 +311,52 @@ def test_left_outer_stream_emits_unmatched_views(spark):
         .count()
     )
     assert pdf["view_event_id"].nunique() == n_views
+
+
+def test_binlog_state_reads_launch_no_inference_jobs(spark, tmp_path):
+    """The replica's state versions are read with a known schema:
+    building the FINAL read launches no Spark job, and merging a
+    micro-batch into an existing state launches no more jobs than the
+    first micro-batch, which has no state to read — no parquet
+    schema-inference job on either path."""
+    import os
+
+    from mysql_to_clickhouse_spark.streaming.cdc import (
+        make_binlog_apply,
+        read_binlog_state,
+    )
+
+    sc = spark.sparkContext
+    state = str(tmp_path / "state")
+    os.makedirs(state)
+    apply = make_binlog_apply(state)
+    schema = (
+        "log_file string, log_pos long, seq long, op string, gtid string, "
+        "user_id long, event_id long, ts_us long, event_type string, "
+        "value double"
+    )
+    v0 = [("binlog.000001", 100, i, "insert", None, i, i, i, "view", 1.0)
+          for i in range(4)]
+    v1 = [("binlog.000002", 50, 0, "update", None, 1, 9, 9, "click", 2.0),
+          ("binlog.000002", 80, 1, "delete", None, 2, 2, 2, "view", 1.0)]
+
+    def in_group(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, sc.statusTracker().getJobIdsForGroup(group)
+
+    _, first = in_group("apply-v0",
+                        lambda: apply(spark.createDataFrame(v0, schema), 0))
+    _, merged = in_group("apply-v1",
+                         lambda: apply(spark.createDataFrame(v1, schema), 1))
+    assert first and len(merged) == len(first)
+    final, built = in_group("final-build",
+                            lambda: read_binlog_state(spark, state))
+    assert built == []
+    assert sorted(map(tuple, final.collect())) == [
+        (0, 0, 0, "view", 1.0), (1, 9, 9, "click", 2.0),
+        (3, 3, 3, "view", 1.0),
+    ]
